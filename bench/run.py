@@ -64,7 +64,7 @@ def sbt_env():
     env["SBT_OPTS"] = ("-Dsbt.override.build.repos=true "
                        "-Dsbt.repository.config=" +
                        os.path.expanduser("~/.sbt/repositories") +
-                       " -Dsbt.offline=true -Xmx2g")
+                       " -Dsbt.offline=true -Xmx2g -XX:-UsePerfData")
     env["GRAFTBENCH_TARGET"] = os.path.join(BUILD, "sbt")
     return env
 
@@ -162,7 +162,8 @@ def main():
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
     result_file = os.path.join(work, "result.json")
-    cmd = (["java", f"-Xmx{heap()}g", "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
+    cmd = (["java", f"-Xmx{heap()}g", "-XX:-UsePerfData",
+            "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", classpath, "graftbench.Main",
