@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line. A warmup pass (flagship query + a scan
   * of each input table) absorbs JIT/codegen/first-scan setup so the
@@ -11,25 +9,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // both floors at Spark defaults — see GraftSession.builder: the
-      // r16 64k/128k floors multiplied task counts suite-wide and the
-      // 32-core A/B (and the r16 driver run) showed a net loss;
-      // compute-dense stages parallelize via explicit repartition now
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "4194304"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietBoundedWindowWarning()
 

@@ -71,6 +71,19 @@ object GraftSession {
       // runtime bloom-filter pruning: selective join sides seed a
       // bloom filter pushed into the probe-side scan (big at 100 TB)
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // file-listing job width: capped at the session's parallelism.
+      // Above the 32-path threshold Spark lists a read's paths as a
+      // job with one task per path (default cap 10,000), and every
+      // task deserializes the session's whole Hadoop Configuration.
+      // A streaming micro-batch of 90 JSON-line files
+      // (FileStreamSource.getBatch) ran 90 such tasks: on a 4-core VM
+      // getBatch took 0.55-1.25 s of each catch-up query's first
+      // trigger, and 0.12-0.40 s with the cap (4 tasks). The threshold
+      // stays at the default: raising it lists faster on a local
+      // disk, but it makes large listings serial, and at 100 TB on a
+      // remote store that stats thousands of files one at a time.
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
 
   def getOrCreate(): SparkSession = builder().getOrCreate()

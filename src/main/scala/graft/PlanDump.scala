@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump a normalized physical plan per query into `plans/` — a
   * reviewable, diffable record of HOW each operator executes (join
   * strategies, exchanges, pushed filters, codegen spans). Expression
@@ -19,14 +17,9 @@ object PlanDump {
     // iteration (a full 197-query dump re-executes every eager
     // checkpoint); substring match against the query key
     val only = if (args.length > 2) args(2).split(",").toSeq else Seq.empty
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
+    val spark = GraftSession.builder("local[4]", 4)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // empty → all (the driver's contract)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // both floors at Spark defaults — see GraftSession.builder
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "4194304"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietBoundedWindowWarning()
     new java.io.File(outDir).mkdirs()

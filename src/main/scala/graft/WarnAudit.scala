@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Serial per-query runner for WARNING ATTRIBUTION — executes each
   * `SparkEntry.queries` entry one at a time with `### begin/end`
@@ -16,14 +15,7 @@ object WarnAudit {
     val sfDir = args(0)
     val only = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }

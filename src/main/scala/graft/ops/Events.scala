@@ -621,12 +621,12 @@ object Events {
       // both sides of the self-join read this: materialize so the
       // events scan + session window runs once, not per side
       .localCheckpoint()
-    val a = bands.select(col("band"), col("user_id").as("user_a"),
+    val a = bands.select(col("band").as("band_a"), col("user_id").as("user_a"),
       col("sid").as("sid_a"), col("s").as("s_a"), col("e").as("e_a"))
-    val b = bands.select(col("band"), col("user_id").as("user_b"),
+    val b = bands.select(col("band").as("band_b"), col("user_id").as("user_b"),
       col("sid").as("sid_b"), col("s").as("s_b"), col("e").as("e_b"))
     a.join(b,
-        a("band") === b("band") && col("user_a") < col("user_b") &&
+        col("band_a") === col("band_b") && col("user_a") < col("user_b") &&
           col("s_a") <= col("e_b") && col("s_b") <= col("e_a"))
       .select(col("user_a"), col("user_b"), col("sid_a"), col("sid_b"),
         (least(col("e_a"), col("e_b")) -

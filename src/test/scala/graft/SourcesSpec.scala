@@ -1,9 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 import graft.cdc.Changelog
 import graft.sources.ChangelogSource
+import graft.streaming.CdcStreams
 
 class SourcesSpec extends SparkSpec {
 
@@ -98,5 +104,35 @@ class SourcesSpec extends SparkSpec {
     val streamed = spark.table("srcfts").count()
     val batch = Changelog.ftsRoute(cl).count()
     assert(streamed == batch && streamed > 0)
+  }
+
+  test("a micro-batch of more than 32 files lists them in a job no wider than the session") {
+    val cl = Changelog.fromEvents(Tables.events(spark, sf))
+    val dir = Files.createTempDirectory("graft-jsonl-wide").toString
+    ChangelogSource.toJsonLines(cl).repartition(40)
+      .write.mode("overwrite").text(dir)
+    assert(new java.io.File(dir).list().count(_.startsWith("part-")) > 32)
+    val widest = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        widest.accumulateAndGet(e.stageInfos.map(_.numTasks).sum, math.max(_, _))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = CdcStreams.ftsRoute(ChangelogSource.streamJsonLines(spark, dir))
+      .writeStream.format("memory").queryName("widefts").start()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // every file landed in one micro-batch, so getBatch listed them all
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    val cores = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(widest.get > 0 && widest.get <= cores,
+      s"widest job ran ${widest.get} tasks on a $cores-partition session")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val batch = rows(Changelog.ftsRoute(ChangelogSource.fromJsonLines(spark, dir)))
+    assert(rows(spark.table("widefts")) == batch && batch.nonEmpty)
   }
 }

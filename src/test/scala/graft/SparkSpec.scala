@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one per suite, small parallelism. */
+/** Shared local session for specs: one per suite, small parallelism,
+  * built by the library's own [[GraftSession.builder]]. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
